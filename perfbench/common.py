@@ -3,80 +3,26 @@ run, and the timing helpers."""
 
 from __future__ import annotations
 
+import json
 import math
+import os
 import statistics
 import time
 from dataclasses import dataclass, field
 
-from querymap import MODULES
-
 CORES = 4
 SETUP_REPS = 3
 
-# End-to-end metrics, printed with --trace 0 on every workload. Throughput
-# is URLs resolved into the seen set per second on polite_crawl and query
-# executions per second on query_suite.
-END_TO_END = {
-    "setup_s": "s",
-    "wall_s": "s",
-    "cpu_s": "s",
-    "peak_pss_mb": "MB",
-    "throughput": "1/s",
-}
-
-# Per-layer metrics, printed with --trace 1 on every workload; a layer a
-# workload does not run reads 0.
-PER_LAYER = {
-    "round_s.p50": "s",
-    "round_s.tail": "s",
-    "query_s.p50": "s",
-    "query_s.p90": "s",
-    "crawl.rounds": "count",
-    "crawl.dequeue_s": "s",
-    "crawl.materialize_s": "s",
-    "crawl.plan_build_s": "s",
-    "crawl.mat_wait_s": "s",
-    "crawl.writes_s": "s",
-    "crawl.commit_s": "s",
-    "crawl.serial_s": "s",
-    "spark.jobs": "count",
-    "spark.stages": "count",
-    "spark.tasks": "count",
-    "spark.failed_tasks": "count",
-    "spark.exec_run_s": "s",
-    "spark.exec_cpu_s": "s",
-    "spark.shuffle_read_mb": "MB",
-    "spark.shuffle_write_mb": "MB",
-    "spark.busy_ratio": "ratio",
-    "html.parse_ms_per_page": "ms",
-    "html.pages": "count",
-    "url.normalize_us_per_row": "us",
-    "url.children": "count",
-    "frontier.anti_join_s": "s",
-    "frontier.seen_drop_ratio": "ratio",
-    "frontier.dequeue_s": "s",
-    "frontier.deferred_ratio": "ratio",
-    "frontier.dedup_children_s": "s",
-    "frontier.children_dup_ratio": "ratio",
-    "robots.filter_s": "s",
-    "robots.blocked": "count",
-    "fetch.join_s": "s",
-    "fetch.miss_ratio": "ratio",
-    "fetch.broadcast": "count",
-    "rules.present": "count",
-    "rules.plan_s": "s",
-    "rules.extract_s": "s",
-    "rules.children": "count",
-    "rules.items": "count",
-    "state.compact_s": "s",
-    "state.files": "count",
-    "state.mb": "MB",
-    "state.seen_read_s": "s",
-    **{f"query_s.{m}": "s" for m in MODULES},
-    "trace.wall_s": "s",
-    "trace.overhead_s": "s",
-    "trace.spans": "count",
-}
+# The metric names and units are those of BENCHMARK.json at the root of the
+# checkout: the end-to-end ones are printed with --trace 0, the per-layer
+# ones with --trace 1, on every workload. Throughput is URLs resolved into
+# the seen set per second on polite_crawl and query executions per second
+# on query_suite; a layer a workload does not run reads 0.
+with open(os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "BENCHMARK.json")) as _fh:
+    _SPEC = json.load(_fh)
+END_TO_END = {m["name"]: m["unit"] for m in _SPEC["end_to_end"]}
+PER_LAYER = {m["name"]: m["unit"] for m in _SPEC["per_layer"]}
 
 
 @dataclass
@@ -129,11 +75,24 @@ def tail_label(n: int) -> str:
     return f"p{100 * (n - 10) / n:.1f}" if n >= 21 else "p90 (nearest rank)"
 
 
-def measure(fn):
-    """(result, wall s, process-tree CPU s, peak memory sampler)."""
-    from sysmon import PeakMemory, tree_cpu_seconds
+def host_loop_s(n: int = 10_000_000) -> float:
+    """Seconds a fixed pure-Python loop takes: a probe of the machine's
+    speed, independent of the engine. Run with no engine process alive,
+    it shows how fast the machine itself ran around a run."""
+    t0, x = time.perf_counter(), 0
+    for i in range(n):
+        x += i
+    return time.perf_counter() - t0
 
-    with PeakMemory() as mem:
+
+def measure(fn, spark):
+    """(result, wall s, process-tree CPU s, peak memory sampler)."""
+    from pyspark import SparkContext
+
+    from sysmon import JvmMemory, PeakMemory, tree_cpu_seconds
+
+    jvm = JvmMemory(spark.sparkContext._jvm, SparkContext._gateway.proc.pid)
+    with PeakMemory(jvm=jvm) as mem:
         cpu0, t0 = tree_cpu_seconds(), time.monotonic()
         out = fn()
         wall, cpu = time.monotonic() - t0, tree_cpu_seconds() - cpu0
@@ -141,5 +100,15 @@ def measure(fn):
 
 
 def memory_note(mem) -> str:
-    return "peak PSS split: " + ", ".join(
-        f"{name} {b / 2**20:.0f} MB" for name, b in sorted(mem.parts.items()))
+    parts = ", ".join(f"{name} {b / 2**20:.0f} MB"
+                      for name, b in mem.jvm_parts.items())
+    return (f"peak memory: Python processes {mem.pss_peak / 2**20:.0f} MB "
+            f"(PSS), JVM {mem.jvm_peak / 2**20:.0f} MB ({parts}); "
+            f"JVM resident {mem.jvm_pss_peak / 2**20:.0f} MB")
+
+
+def memory_values(mem) -> dict:
+    return {"peak_mem_mb": mem.peak / 2**20,
+            "mem.jvm_pss_mb": mem.jvm_pss_peak / 2**20,
+            "mem.spark_storage_mb": mem.jvm_parts["storage"] / 2**20,
+            "mem.spark_execution_mb": mem.jvm_parts["execution"] / 2**20}

@@ -215,7 +215,8 @@ class _Replay:
 
     def round(self, rnd: int) -> None:
         """The selection layers of round ``rnd`` on its captured inputs:
-        its frontier snapshot and the seen rows committed before it."""
+        its frontier snapshot and the seen rows committed before it. Each
+        layer is called with the arguments ``run_round`` passes it."""
         from pyspark.sql import functions as F
 
         from firmwarescraper_spark.operators import frontier as FR
@@ -223,14 +224,21 @@ class _Replay:
 
         eng = self.eng
         frontier, n_frontier = self.hold(eng._read_frontier(rnd))
-        seen, _ = self.hold(eng.seen().filter(F.col("round") < rnd)
-                            .select("url_hash", "fetch_key"))
-        cand = FR.anti_join_seen(frontier, seen)
-        self.sink("frontier.anti_join", cand, round=rnd)
-        cand, n_cand = self.hold(cand)
+        seen, n_seen = self.hold(eng.seen().filter(F.col("round") < rnd)
+                                 .select("url_hash", "fetch_key"))
+        if n_seen:
+            cand = FR.anti_join_seen(frontier, seen,
+                                     bloom=eng.use_bloom_prefilter)
+            self.sink("frontier.anti_join", cand, round=rnd)
+            cand, n_cand = self.hold(cand)
+        else:
+            # run_round skips the anti-join while nothing is seen
+            cand, n_cand = frontier, n_frontier
 
-        rules, budget = eng._robots()
-        allowed, blocked = RB.robots_filter(cand, rules)
+        rules, budget = eng._robots(frontier)
+        allowed, blocked, joined = RB.robots_filter(
+            cand, rules, persist_split=True)
+        self.held.append(joined)
         self.sink("robots.filter", allowed, blocked, round=rnd)
         allowed, n_allowed = self.hold(allowed)
 
@@ -258,18 +266,24 @@ class _Replay:
         reference crawl from all seeds, vendors included, each with the
         rule the reference assigned it, so that all rule packs run (lineage
         starts empty). Its frontier first meets the crawl's final seen set
-        in the anti-join, which drops the pages the crawl fetched."""
+        in the anti-join, which drops the pages the crawl fetched.
+
+        The parse, rule and child-normalization steps are not public
+        functions of the engine but inline code of ``run_round``; they are
+        rebuilt here from the same calls (see README.md for where they
+        differ)."""
         from pyspark.sql import functions as F
 
         from firmwarescraper_spark.functions import url as U
         from firmwarescraper_spark.functions.html import parse_page_udf
         from firmwarescraper_spark.operators import frontier as FR
         from firmwarescraper_spark.plans import rulepacks as RP
+        from firmwarescraper_spark.plans.crawl import FRONTIER_SCHEMA
 
         eng = self.eng
         frontier, n_frontier = self.hold(eng.seed_frontier(requests))
         seen, _ = self.hold(eng.seen().select("url_hash", "fetch_key"))
-        cand = FR.anti_join_seen(frontier, seen)
+        cand = FR.anti_join_seen(frontier, seen, bloom=eng.use_bloom_prefilter)
         self.sink("frontier.anti_join", cand)
         self.add("frontier", n_frontier)
         self.add("cand", cand.count())
@@ -287,23 +301,32 @@ class _Replay:
         self.sink("html.parse", parsed)
         parsed, n_pages = self.hold(parsed)
 
-        self.rules = {r[0] for r in parsed.select("rule").distinct().collect()}
-        children, items = [], []
+        present = set(frontier.agg(F.collect_set("rule")).first()[0])
+        children, pats, items, quarantine = [], set(), [], []
         with self.tr.span("rules.plan"):
-            for rule in sorted(self.rules):
-                res = RP.RULES[rule](parsed.filter(F.col("rule") == rule))
+            for rule, fn in RP.RULES.items():
+                if rule not in present:
+                    continue
+                res = fn(parsed.filter(F.col("rule") == rule))
                 if res[0] is not None:
-                    children.append(res[0])
+                    pat = RP.allowed_host_pattern(rule)
+                    pats.add(pat)
+                    children.append(res[0].withColumn("_pat", F.lit(pat)))
                 if res[1] is not None:
                     items.append(res[1])
-        kids, its = children[0], items[0]
+                if len(res) > 2 and res[2] is not None:
+                    quarantine.append(res[2])
+        self.rules = present
+        kids = children[0]
         for df in children[1:]:
             kids = kids.unionByName(df)
-        for df in items[1:]:
-            its = its.unionByName(df)
-        self.sink("rules.extract", kids, its)
+        self.sink("rules.extract", kids, *items, *quarantine)
         kids, n_kids = self.hold(kids)
 
+        offsite = F.coalesce(
+            *[F.when(F.col("_pat") == p, F.col("host").rlike(p))
+              for p in sorted(pats)],
+            F.lit(False))
         fresh = (
             kids.repartition(eng.spark.sparkContext.defaultParallelism)
             .withColumn("canon_url", U.canonicalize_url_udf()(F.col("url")))
@@ -311,16 +334,26 @@ class _Replay:
                         U.fetch_key_col(F.col("canon_url"), F.col("form_data")))
             .withColumn("url_hash", F.xxhash64("fetch_key"))
             .withColumn("host", U.url_host_udf()(F.col("url")))
+            .filter(offsite)
+            .withColumn("priority", FR.priority_score(F.col("url")))
             .withColumn("seq", F.concat_ws(
                 ".", F.col("parent_seq"),
-                F.format_string("%09d", F.col("pos")))))
+                F.format_string("%09d", F.col("pos"))))
+            .withColumn("round_added", F.lit(1))
+            .withColumn("retry_count", F.lit(0))
+            .select([f.name for f in FRONTIER_SCHEMA.fields]))
         self.sink("url.normalize", fresh)
         fresh, _ = self.hold(fresh)
+        # run_round dedups against this round's seen rows (here every
+        # request, all fetched), the earlier seen rows and the rows
+        # scheduled for the next round (none: nothing is deferred)
         kept = FR.dedup_new_children(
-            fresh, frontier.select("url_hash", "fetch_key"))
+            fresh, frontier.select("url_hash", "fetch_key")
+            .unionByName(seen))
         self.sink("frontier.dedup_children", kept)
+        n_items = sum(df.count() for df in items)
         for key, n in (("pages", n_pages), ("children", n_kids),
-                       ("items", its.count()), ("kept", kept.count())):
+                       ("items", n_items), ("kept", kept.count())):
             self.add(key, n)
 
 
@@ -342,7 +375,7 @@ def run_workload(spark, work: str, args, session_s: float):
     import statistics
 
     from common import (CORES, Result, measure, median_setup, memory_note,
-                        passes, tail, tail_label)
+                        memory_values, passes, tail, tail_label)
     from spans import Tracer
 
     res = Result()
@@ -361,15 +394,15 @@ def run_workload(spark, work: str, args, session_s: float):
 
     tracer = Tracer(f"polite_crawl-{args.seed}") if args.trace else None
     crawl = PoliteCrawl(spark, pages, os.path.join(work, "state"), tracer)
-    wall = cpu = peak = 0.0
-    peak_note = ""
+    wall = cpu = 0.0
+    peak = None  # the memory sampler of the pass with the highest peak
     urls = 0
     windows = []  # epoch ms of each timed crawl, for the Spark totals
     for _ in range(passes(args.seconds, CRAWL_S)):
         n_before = len(crawl.round_s)
         t_start = time.time() * 1e3
         try:
-            summary, w, c, mem = measure(lambda: crawl.run(seeds))
+            summary, w, c, mem = measure(lambda: crawl.run(seeds), spark)
         except Exception as exc:  # a failed round ends the run, reported
             res.attempted += len(crawl.round_s) - n_before + 1
             res.failures.append(
@@ -378,8 +411,8 @@ def run_workload(spark, work: str, args, session_s: float):
             break
         windows.append((t_start, time.time() * 1e3))
         wall, cpu = wall + w, cpu + c
-        if mem.peak > peak:
-            peak, peak_note = mem.peak, memory_note(mem)
+        if peak is None or mem.peak > peak.peak:
+            peak = mem
         urls += summary["seen"]
         rounds = len(crawl.round_s) - n_before
         res.attempted += rounds
@@ -388,14 +421,14 @@ def run_workload(spark, work: str, args, session_s: float):
             res.failures += [f"crawl check: {name}"] * rounds
     if res.failures:
         res.notes += [f"FAILED {f}" for f in dict.fromkeys(res.failures)]
-    if not crawl.round_s:
+    if peak is None:
         return res
     v = res.values
     v.update({
         "setup_s": setup_s,
         "wall_s": wall,
         "cpu_s": cpu,
-        "peak_pss_mb": peak / 2**20,
+        **memory_values(peak),
         "throughput": urls / wall if wall else 0.0,
         "round_s.p50": statistics.median(crawl.round_s),
         "round_s.tail": tail(crawl.round_s),
@@ -406,7 +439,7 @@ def run_workload(spark, work: str, args, session_s: float):
         f"({times} s), {urls} URLs; round_s.tail = "
         f"{tail_label(len(crawl.round_s))}; set-up: session {session_s:.2f} s, "
         f"corpus {gen_s:.2f} s, reference and warm-up "
-        f"{setup_s - session_s - gen_s:.2f} s; {peak_note}")
+        f"{setup_s - session_s - gen_s:.2f} s; {memory_note(peak)}")
     if tracer is None:
         return res
 

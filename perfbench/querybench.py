@@ -99,7 +99,7 @@ def run_workload(spark, work: str, args, session_s: float):
 
     import __spark_entry__ as E
     from common import (CORES, Result, measure, median_setup, memory_note,
-                        passes, tail, tail_label)
+                        memory_values, passes, tail, tail_label)
     from spans import Tracer
 
     res = Result()
@@ -134,7 +134,7 @@ def run_workload(spark, work: str, args, session_s: float):
                 one(name)
 
     t_start = time.time() * 1e3
-    _, wall, cpu, mem = measure(timed)
+    _, wall, cpu, mem = measure(timed, spark)
     t_end = time.time() * 1e3
     n_timed = len(runs)
     if tracer is not None:
@@ -157,7 +157,7 @@ def run_workload(spark, work: str, args, session_s: float):
         "setup_s": setup_s,
         "wall_s": wall,
         "cpu_s": cpu,
-        "peak_pss_mb": mem.peak / 2**20,
+        **memory_values(mem),
         "throughput": n_timed / wall,
         "query_s.p50": statistics.median(times),
         "query_s.p90": tail(times),

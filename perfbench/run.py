@@ -58,15 +58,10 @@ class Session:
             app_name="perfbench", master=f"local[{CORES}]",
             shuffle_partitions=CORES,
             extra_conf={
-                "spark.driver.memory": "2g",
                 "spark.local.dir": os.path.join(work, "spark-local"),
                 "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-                # the whole heap is touched at start, so that the JVM's
-                # resident size does not depend on when the collector
-                # grows the heap
                 "spark.driver.extraJavaOptions":
-                    f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms2g "
-                    "-XX:+AlwaysPreTouch",
+                    f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
                 "spark.ui.showConsoleProgress": "false",
                 "spark.ui.retainedJobs": "100000",
                 "spark.ui.retainedStages": "100000",
@@ -122,6 +117,9 @@ def main(argv=None) -> int:
             from crawlbench import run_workload
         else:
             from querybench import run_workload
+        from common import host_loop_s
+
+        probe = [host_loop_s()]
         t0 = time.monotonic()
         session = Session(work)
         session_s = time.monotonic() - t0
@@ -129,6 +127,11 @@ def main(argv=None) -> int:
             result = run_workload(session.spark, work, args, session_s)
         finally:
             session.close()
+        probe.append(host_loop_s())
+        result.values["host.loop_s"] = sum(probe) / 2
+        result.notes.append(
+            "host speed probe (fixed pure-Python loop, no engine process "
+            f"alive): {probe[0]:.3f} s before the run, {probe[1]:.3f} s after")
         if result.tracer is not None:
             traces = os.path.join(base, "traces")
             os.makedirs(traces, exist_ok=True)

@@ -143,16 +143,29 @@ def test_harvest_counts_a_known_job(spark):
     assert log.totals([(t2 + 1, t2 + 2)]).jobs == 0
 
 
-def test_benchmark_json_lists_the_reported_metrics():
-    import json
+def test_jvm_memory_counts_cached_rows(spark):
+    from pyspark import SparkContext
 
-    from common import END_TO_END, PER_LAYER
-
-    with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as fh:
-        doc = json.load(fh)
-    assert {m["name"]: m["unit"] for m in doc["end_to_end"]} == END_TO_END
-    assert {m["name"]: m["unit"] for m in doc["per_layer"]} == PER_LAYER
-    assert {w["name"] for w in doc["workloads"]} == {"polite_crawl", "query_suite"}
+    jvm = sysmon.JvmMemory(spark.sparkContext._jvm,
+                           SparkContext._gateway.proc.pid)
+    base = jvm.sample()
+    # a million distinct 128-character strings cached in the JVM
+    rows = spark.range(1_000_000).selectExpr(
+        "sha2(cast(id as string), 512) as s").persist()
+    assert rows.count() == 1_000_000
+    try:
+        with sysmon.PeakMemory(interval=0.1, jvm=jvm,
+                               jvm_interval=0.02) as mem:
+            time.sleep(0.3)
+    finally:
+        rows.unpersist(blocking=True)
+    assert mem.jvm_parts["storage"] - base[0] >= 100 * 2**20
+    assert mem.jvm_parts["non_heap"] > 0
+    assert mem.jvm_peak >= sum(base) + 100 * 2**20
+    # the JVM's resident size is reported, not counted
+    assert mem.jvm_pss_peak > 0
+    assert mem.peak == mem.pss_peak + mem.jvm_peak
+    assert jvm.sample()[0] < base[0] + 10 * 2**20
 
 
 def test_passes_are_fixed_by_seconds():
