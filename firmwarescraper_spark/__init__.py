@@ -17,7 +17,9 @@ Layout:
                    driver loop (the reference's scrapy engine, as DataFrame
                    jobs) + a pure-Python reference simulator for parity
     streaming/   — Structured Streaming facade over the events table
-    multimodal/  — binary-column (image/audio) plumbing with stubbed decoders
+    multimodal/  — binary-column (image/audio/video) plumbing: pure-numpy
+                   BMP/PNG/WAV/JPEG codecs, stub-tagged fallback for the
+                   rest
 """
 
 __version__ = "0.1.0"

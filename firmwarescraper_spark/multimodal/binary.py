@@ -3,27 +3,24 @@
 Media payloads are opaque ``binary`` columns with typed metadata structs —
 the training-data-pipeline pattern for 100 TB multimodal corpora.
 
-Decode status (honest inventory):
+Decode status:
   * **REAL** (pure numpy/stdlib): BMP (24-bit), PNG (8-bit gray/RGB/RGBA,
-    non-interlaced, all five scanline filters), WAV (PCM16) in
-    multimodal/codecs.py, and **JPEG** — both baseline (SOF0) and
-    progressive (SOF2 with spectral selection + successive approximation
-    + EOBRUN) — in multimodal/jpeg.py (4:4:4/4:2:2/4:2:0/gray, restart
-    intervals; encoders at 4:4:4 and 4:2:0, baseline and progressive) —
-    decode, nearest-neighbor resize, re-encode, image and audio feature
+    non-interlaced, all five scanline filters) and WAV (PCM16) in
+    multimodal/codecs.py; JPEG baseline (SOF0), extended sequential
+    (SOF1, 8- or 12-bit) and progressive (SOF2, 8- or 12-bit) in
+    multimodal/jpeg.py, with 12-bit rasters normalized to 8-bit at this
+    layer; Motion-JPEG video frames through the same JPEG decoder.
+    Decode, nearest-neighbor resize, re-encode, image and audio feature
     extraction all operate on actual pixels/samples.
-  * **REAL metadata, stubbed frames**: MP4/ISO-BMFF container metadata
+  * **REAL metadata, STUBBED pixels**: MP4/ISO-BMFF container metadata
     (track dims from tkhd, duration from mvhd, sample-entry fourcc) is a
-    real box-tree parse (multimodal/codecs.py ``mp4_meta``); NON-MJPEG frame
-    DECODE kernels (no ffmpeg in this container) and the one remaining
-    exotic JPEG profile (hierarchical — 12-bit EXTENDED SEQUENTIAL,
-    12-bit PROGRESSIVE, LOSSLESS SOF3 with all 7 predictors **and**
-    ARITHMETIC-CODED sequential SOF9 + progressive SOF10 + lossless
-    SOF11 via the jpeg_arith QM coder all decode for real since round 5,
-    normalized to 8-bit at this layer) fall through to ``_decode_stub`` and are tagged
-    ``codec = "stub"`` per row so downstream consumers can tell. At deployment, swap the stub for the
-    native lib; every schema and mapInPandas batch contract stays
-    identical.
+    real box-tree parse (codecs.mp4_meta), and every other JPEG profile
+    (lossless SOF3, arithmetic-coded SOF9/SOF10/SOF11, hierarchical)
+    reports its dims from the SOF header. Their pixels and frames (no
+    libjpeg/ffmpeg in this container) fall through to ``_decode_stub``
+    and are tagged ``codec = "stub"`` per row so downstream consumers
+    can tell. At deployment, swap the stub for the native lib; every
+    schema and mapInPandas batch contract stays identical.
 
 Scale notes: decode/feature-extract run via ``mapInPandas`` so each Arrow
 batch amortizes the Python crossing; batch size is governed by
@@ -128,8 +125,9 @@ def attach_media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# decode / transform kernels — REAL for BMP/PNG/WAV (multimodal/codecs.py),
-# STUBBED for JPEG/MP4 (no libjpeg/ffmpeg in container)
+# decode / transform kernels — REAL for BMP/PNG/WAV and baseline,
+# extended and progressive JPEG; STUBBED for other JPEG profiles and
+# non-MJPEG video (no libjpeg/ffmpeg in container)
 # ---------------------------------------------------------------------------
 
 def _decode_stub(payload: bytes, op: str, params: str = "") -> bytes:
@@ -161,10 +159,10 @@ def _try_decode_image(payload: bytes):
 
             arr = JX.decode_jpeg(payload)
             if arr.dtype == np.uint16:
-                # high-bit-depth profiles (12-bit extended/progressive,
-                # 2-16-bit lossless): normalize to the pipeline's uniform
-                # 8-bit raster contract by the FRAME's declared precision
-                # (full-depth rasters stay available via jpeg.decode_jpeg)
+                # 12-bit extended/progressive profiles: normalize to the
+                # pipeline's uniform 8-bit raster contract by the FRAME's
+                # declared precision (full-depth rasters stay available
+                # via jpeg.decode_jpeg)
                 prec = JX.jpeg_precision(payload) or 16
                 arr = (arr >> max(prec - 8, 0)).astype(np.uint8)
             return arr, "jpeg"

@@ -11,14 +11,11 @@ Scope:
     to uint16 rasters in [0, 4095]); 1 or 3 components, any sampling
     factors up to 2x2 (4:4:4, 4:2:2, 4:2:0, grayscale), byte-stuffed
     entropy stream, restart intervals (DRI/RSTn), multiple DQT/DHT
-    segments, DHT redefinition between scans; AND lossless sequential
-    (SOF3, T.81 Annex H: all 7 predictors, point transform, 2-16 bit
-    precision, exact reconstruction); AND the arithmetic-coded twins —
-    extended sequential (SOF9), progressive (SOF10), lossless (SOF11) —
-    QM coder + DAC conditioning, implemented in jpeg_arith.py and
-    dispatched from here. Hierarchical SOF markers are rejected with a
-    ValueError (those payloads fall back to the tagged stub path in
-    binary.py).
+    segments, DHT redefinition between scans. Every other SOF marker —
+    lossless (SOF3), the arithmetic-coded profiles (SOF9, SOF10, SOF11)
+    and the hierarchical ones — is rejected with a ValueError (those
+    payloads fall back to the tagged stub path in binary.py); their
+    headers still parse through ``jpeg_dims`` / ``jpeg_precision``.
   * encode — baseline (``encode_jpeg``), progressive
     (``encode_jpeg_progressive``), and 12-bit extended sequential
     (``encode_jpeg_12bit``: SOF1 + Pq=1 quant tables + flat custom
@@ -290,18 +287,14 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     sequential (SOF1). Baseline/extended decode block-streaming;
     progressive (SOF2, spectral selection AND successive approximation)
     accumulates the coefficient store across scans and reconstructs at
-    EOI. Arithmetic-coded sequential (SOF9) and progressive (SOF10)
-    dispatch to jpeg_arith. Hierarchical / lossless-arithmetic profiles
-    raise ValueError."""
+    EOI. Lossless, arithmetic-coded and hierarchical profiles raise
+    ValueError."""
     if not payload or payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
     qt = {}                 # id -> 64 int32 (natural order)
     huff_dc, huff_ac = {}, {}
     frame = None            # (h, w, [(cid, hs, vs, qid)])
     progressive = False
-    lossless = False
-    arith = False
-    dc_cond, ac_cond = {}, {}   # DAC conditioning (jpeg_arith defaults)
     coeffs = None           # progressive: cid -> (bh, bw, 64) int32 (zigzag)
     restart_interval = 0
     pos = 2
@@ -344,14 +337,11 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 table = _build_decode_map(bits, vals)
                 (huff_dc if tc == 0 else huff_ac)[th] = table
                 bpos += 17 + nv
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC9, 0xCA):
+        elif marker in (0xC0, 0xC1, 0xC2):
             # SOF0 baseline (8-bit) / SOF1 extended sequential (8- or
-            # 12-bit, T.81 table B.2) / SOF2 progressive / SOF9 extended
-            # sequential with ARITHMETIC entropy coding / SOF10
-            # progressive arithmetic
+            # 12-bit, T.81 table B.2) / SOF2 progressive
             prec = body[0]
-            progressive = marker in (0xC2, 0xCA)
-            arith = marker in (0xC9, 0xCA)
+            progressive = marker == 0xC2
             allowed = (8,) if marker == 0xC0 else (8, 12)
             if prec not in allowed:
                 raise ValueError(
@@ -371,35 +361,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                     cid: np.zeros((bh_pad, bw_pad, 64), dtype=np.int32)
                     for cid, (_, _, bw_pad, bh_pad, _, _) in geo[2].items()
                 }
-        elif marker in (0xC3, 0xCB):
-            # SOF3 lossless sequential (T.81 Annex H): P in 2..16;
-            # SOF11 is its arithmetic-coded twin (jpeg_arith)
-            prec = body[0]
-            lossless = True
-            arith = marker == 0xCB
-            if not 2 <= prec <= 16:
-                raise ValueError(f"bad lossless precision {prec}")
-            h, w = struct.unpack_from(">HH", body, 1)
-            ncomp = body[5]
-            comps = []
-            for i in range(ncomp):
-                cid = body[6 + 3 * i]
-                hv = body[7 + 3 * i]
-                comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * i]))
-            frame = (h, w, comps, prec)
-        elif marker in (0xC5, 0xC6, 0xC7,
-                        0xCD, 0xCE, 0xCF):
+        elif marker in (0xC3, 0xC5, 0xC6, 0xC7,
+                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError(f"unsupported SOF marker 0xFF{marker:02X}")
-        elif marker == 0xCC:        # DAC: arithmetic conditioning (B.2.4.3)
-            bpos = 0
-            while bpos + 1 < len(body):
-                tc, tb = body[bpos] >> 4, body[bpos] & 0x0F
-                cs = body[bpos + 1]
-                if tc == 0:
-                    dc_cond[tb] = (cs & 0x0F, cs >> 4)     # (L, U)
-                else:
-                    ac_cond[tb] = cs                        # Kx
-                bpos += 2
         elif marker == 0xDD:        # DRI
             restart_interval = struct.unpack_from(">H", body, 0)[0]
         elif marker == 0xDA:        # SOS -> entropy data follows
@@ -412,40 +376,16 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 tt = body[2 + 2 * i]
                 scan.append((cs, tt >> 4, tt & 0x0F))
             data_start = pos + length
-            if lossless:
-                # Ss = predictor selector (1-7), Al = point transform
-                predictor = body[1 + 2 * ns]
-                pt = body[3 + 2 * ns] & 0x0F
-                if arith:
-                    from firmwarescraper_spark.multimodal import jpeg_arith
-                    return jpeg_arith.decode_arith_lossless_scan(
-                        payload, data_start, frame, scan, dc_cond,
-                        restart_interval, predictor, pt)
-                return _decode_lossless_scan(
-                    payload, data_start, frame, scan, huff_dc,
-                    restart_interval, predictor, pt)
-            if arith and not progressive:
-                from firmwarescraper_spark.multimodal import jpeg_arith
-                return jpeg_arith.decode_arith_scan(
-                    payload, data_start, frame, scan, qt, dc_cond,
-                    ac_cond, restart_interval)
             if not progressive:
                 return _decode_scan(
                     payload, data_start, frame, scan, qt, huff_dc, huff_ac,
                     restart_interval)
             ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
             ahal = body[3 + 2 * ns]
-            if arith:
-                from firmwarescraper_spark.multimodal import jpeg_arith
-                pos = jpeg_arith.decode_arith_progressive_scan(
-                    payload, data_start, frame, scan, ss, se,
-                    ahal >> 4, ahal & 0x0F, dc_cond, ac_cond,
-                    restart_interval, coeffs)
-            else:
-                pos = _decode_progressive_scan(
-                    payload, data_start, frame, scan, ss, se,
-                    ahal >> 4, ahal & 0x0F, huff_dc, huff_ac,
-                    restart_interval, coeffs)
+            pos = _decode_progressive_scan(
+                payload, data_start, frame, scan, ss, se,
+                ahal >> 4, ahal & 0x0F, huff_dc, huff_ac,
+                restart_interval, coeffs)
             continue
         pos += length
     if progressive and coeffs is not None:
@@ -746,76 +686,6 @@ def _decode_scan(payload, data_start, frame, scan, qt, huff_dc, huff_ac,
     b = y + 1.772 * cb
     rgb = np.stack([r, g, b], axis=2)
     return (np.clip(rgb, 0, maxval) + 0.5).astype(out_dtype)
-
-
-def _decode_lossless_scan(payload, data_start, frame, scan, huff_dc,
-                          restart_interval, predictor, pt):
-    """SOF3 lossless scan (T.81 Annex H): each sample is a DC-category
-    Huffman-coded difference from a neighbor prediction, reconstructed
-    modulo 2^16; the point transform Pt is re-applied as a left shift at
-    output (H.2.3). Supports the common all-1x1-sampling layout (one
-    sample per component per MCU, interleaved or single-component);
-    category 16 carries no extra bits and means diff = 32768 (H.1.2.2).
-
-    Prediction (H.1.2.1): the very first sample (and the first after a
-    restart) predicts 2^(P - Pt - 1); the rest of the first line uses Ra;
-    the first sample of every other line uses Rb; everywhere else the
-    selected predictor 1-7 applies."""
-    h, w, comps = frame[:3]
-    prec = frame[3]
-    if any(hs != 1 or vs != 1 for _, hs, vs, _ in comps):
-        raise ValueError("lossless decode supports 1x1 sampling only")
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"bad lossless predictor {predictor}")
-    default = 1 << (prec - pt - 1)
-    samples = {cid: np.zeros((h, w), dtype=np.int32) for cid, *_ in comps}
-    tables = {cs: huff_dc[td] for cs, td, _ta in scan}
-    order = [cs for cs, *_ in scan]
-    reader = _BitReader(payload, data_start)
-    mcu_count = 0
-    restart_pending = False
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and mcu_count and \
-                    mcu_count % restart_interval == 0:
-                reader.align_to_restart()
-                restart_pending = True
-            for cs in order:
-                t = _huff_decode(reader, tables[cs])
-                if t == 16:
-                    diff = 32768
-                else:
-                    diff = _extend(reader.receive(t), t)
-                s = samples[cs]
-                if restart_pending or (y == 0 and x == 0):
-                    p = default
-                elif y == 0:
-                    p = int(s[0, x - 1])
-                elif x == 0:
-                    p = int(s[y - 1, 0])
-                else:
-                    ra, rb, rc = (int(s[y, x - 1]), int(s[y - 1, x]),
-                                  int(s[y - 1, x - 1]))
-                    if predictor == 1:
-                        p = ra
-                    elif predictor == 2:
-                        p = rb
-                    elif predictor == 3:
-                        p = rc
-                    elif predictor == 4:
-                        p = ra + rb - rc
-                    elif predictor == 5:
-                        p = ra + ((rb - rc) >> 1)
-                    elif predictor == 6:
-                        p = rb + ((ra - rc) >> 1)
-                    else:
-                        p = (ra + rb) >> 1
-                s[y, x] = (p + diff) & 0xFFFF
-            restart_pending = False
-            mcu_count += 1
-    out_dtype = np.uint8 if prec <= 8 else np.uint16
-    planes = [(samples[cid] << pt).astype(out_dtype) for cid, *_ in comps]
-    return np.stack(planes, axis=2)
 
 
 # ---------------------------------------------------------------------------
@@ -1420,83 +1290,3 @@ def encode_jpeg_12bit(arr: np.ndarray, quality: int = 85) -> bytes:
     out += bw.out
     out += b"\xff\xd9"                                # EOI
     return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# lossless encoder (SOF3, T.81 Annex H) — fixture source for the lossless
-# decode path; flat full-range DC table, same construction as DC12/AC12
-# ---------------------------------------------------------------------------
-
-# categories 0..16 (17 codes): 14 four-bit + 3 five-bit keeps the Kraft sum
-# under 1 so the all-ones code stays unused, as DHT requires
-DC16 = ([0, 0, 0, 14, 3] + [0] * 11, list(range(17)))
-
-
-def encode_jpeg_lossless(arr: np.ndarray, predictor: int = 1,
-                         pt: int = 0) -> bytes:
-    """(H, W) or (H, W, C) integer raster -> SOF3 lossless JFIF bytes.
-    Precision comes from the dtype (uint8 -> 8, else 16); ``pt`` point-
-    transforms samples down by ``pt`` bits before coding (the decoder
-    shifts back up, so decode(encode(a, pt=k)) == (a >> k) << k — exact
-    for pt=0). All components 1x1-sampled, one interleaved scan."""
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"bad lossless predictor {predictor}")
-    a = np.asarray(arr)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    prec = 8 if a.dtype == np.uint8 else 16
-    h, w, ncomp = a.shape
-    planes = (a.astype(np.int64) >> pt)
-    default = 1 << (prec - pt - 1)
-
-    bw = _BitWriter()
-    for y in range(h):
-        for x in range(w):
-            for c in range(ncomp):
-                s = planes[:, :, c]
-                if y == 0 and x == 0:
-                    p = default
-                elif y == 0:
-                    p = int(s[0, x - 1])
-                elif x == 0:
-                    p = int(s[y - 1, 0])
-                else:
-                    ra, rb, rc = (int(s[y, x - 1]), int(s[y - 1, x]),
-                                  int(s[y - 1, x - 1]))
-                    p = (ra, rb, rc, ra + rb - rc, ra + ((rb - rc) >> 1),
-                         rb + ((ra - rc) >> 1), (ra + rb) >> 1)[predictor - 1]
-                d = (int(s[y, x]) - p) & 0xFFFF
-                if d >= 32768:
-                    d -= 65536
-                if d == -32768:
-                    t = 16          # category 16: no extra bits (H.1.2.2)
-                else:
-                    t = int(abs(d)).bit_length()
-                code, ln = _DC16_CODES[t]
-                bw.write(code, ln)
-                if 0 < t < 16:
-                    v = d if d >= 0 else d + (1 << t) - 1
-                    bw.write(v, t)
-    bw.flush()
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    sof = struct.pack(">BHHB", prec, h, w, ncomp)
-    for i in range(ncomp):
-        sof += bytes([i + 1, 0x11, 0])       # 1x1 sampling, Tq unused
-    out += seg(0xC3, sof)
-    out += seg(0xC4, bytes([0x00]) + bytes(DC16[0]) + bytes(DC16[1]))
-    sos = bytes([ncomp])
-    for i in range(ncomp):
-        sos += bytes([i + 1, 0x00])
-    # Ss = predictor, Se = 0, Ah<<4|Al = point transform
-    sos += bytes([predictor, 0x00, pt & 0x0F])
-    out += seg(0xDA, sos)
-    out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-_DC16_CODES = _build_codes(*DC16)

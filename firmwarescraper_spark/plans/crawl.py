@@ -66,6 +66,15 @@ ITEM_COLS = ["vendor", "device_name", "firmware_version", "device_class",
              "release_date", "file_urls"]
 
 
+def _release_checkpoint(fut) -> None:
+    """Done-callback for a ``localCheckpoint`` future: drop the checkpoint's
+    blocks. ``DataFrame.unpersist`` only reaches cache-manager entries; a
+    local checkpoint is a persisted RDD under a ``LogicalRDD`` leaf, so it
+    is released through that RDD."""
+    if not fut.cancelled() and fut.exception() is None:
+        fut.result()._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -76,7 +85,6 @@ class CrawlEngine:
         salt_buckets: int = 8,
         obey_robots: bool = True,
         round_seconds: float = 60.0,
-        broadcast_fetch: bool | str = "auto",
         max_fetch_bytes: int = 2_147_483_648,  # F12: 2 GiB download_maxsize
         max_retries: int = 2,  # T3: scrapy RETRY_TIMES default
         use_bloom_prefilter: bool = False,
@@ -93,7 +101,6 @@ class CrawlEngine:
         self.salt_buckets = salt_buckets
         self.obey_robots = obey_robots
         self.round_seconds = round_seconds
-        self.broadcast_fetch = broadcast_fetch
         self.max_fetch_bytes = max_fetch_bytes
         self.max_retries = max_retries
         self.use_bloom_prefilter = use_bloom_prefilter
@@ -406,11 +413,10 @@ class CrawlEngine:
         join runs unhinted: AQE picks broadcast at runtime if the *actual*
         dequeued set turns out small (budget-capped round over a huge
         frontier), else SMJ — shuffle-free when the corpus is a bucketed
-        table (``pages_table`` / Iceberg SPJ, PLANS.md §2b).
-        ``broadcast_fetch=True/False`` still forces either path."""
-        if self.broadcast_fetch == "auto":
-            return self._frontier_bytes(rnd) <= self.broadcast_cap_bytes
-        return bool(self.broadcast_fetch)
+        table (``pages_table`` / Iceberg SPJ, PLANS.md §2b). A cap of 0
+        forces the unhinted join; a cap above any frontier forces the
+        broadcast."""
+        return self._frontier_bytes(rnd) <= self.broadcast_cap_bytes
 
     def _fetch_join(self, dequeued: DataFrame, use_bcast: bool) -> DataFrame:
         """The fetch stage's corpus equi-join; build side per the gate."""
@@ -790,13 +796,15 @@ class CrawlEngine:
         # window is try/finally-guarded (ADVICE r5): an exception
         # between here and commit shuts the pool down and unpersists the
         # working set instead of leaking executor cache + unsupervised
-        # write jobs.
+        # write jobs. The checkpoint itself is released in the finally
+        # block too: at once after a commit (every write has returned),
+        # or when the materializer finishes after a failure.
         from concurrent.futures import ThreadPoolExecutor
 
         pool = ThreadPoolExecutor(max_workers=5)
         committed = False
+        materialized = pool.submit(seen_add.localCheckpoint)
         try:
-            materialized = pool.submit(seen_add.localCheckpoint)
             pending = []
             present_rules = set(
                 frontier.agg(F.collect_set("rule")).first()[0]
@@ -955,6 +963,7 @@ class CrawlEngine:
                 pool.shutdown(wait=False, cancel_futures=True)
             else:
                 pool.shutdown(wait=False)
+            materialized.add_done_callback(_release_checkpoint)
             dequeued.unpersist()
             _ok_cached.unpersist()
             candidates.unpersist()   # no-op on the robots path

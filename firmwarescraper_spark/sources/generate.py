@@ -18,8 +18,6 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
-import pandas as pd
-
 from firmwarescraper_spark.functions.html import extract_text
 from firmwarescraper_spark.functions.url import canonicalize_url
 
@@ -298,16 +296,6 @@ def corpus_dict(n_avm: int = 8, n_linksys: int = 6, n_mirrors: int = 0,
     return out
 
 
-def pages_pdf(n_avm: int = 8, n_linksys: int = 6, n_mirrors: int = 0,
-              n_avm_mirror: int = 2, n_pad: int = 0,
-              vendor_scale: int = 0) -> pd.DataFrame:
-    """pages table as pandas, input_hint schema (driver-side small variant;
-    write_corpus generates distributed)."""
-    corpus = corpus_dict(n_avm, n_linksys, n_mirrors, n_avm_mirror, n_pad,
-                         vendor_scale)
-    return pd.DataFrame(_rows_from_pages(corpus))
-
-
 def _rows_from_pages(pages: dict) -> list:
     """pages dict -> input_hint rows; warc_ts derives from a stable CRC of
     the url (deterministic regardless of generation order/partitioning)."""
@@ -417,16 +405,37 @@ def demo_media_payloads() -> list:
         # high-bit-depth profile decodes for real since round 5
         (8, JX.encode_jpeg_12bit((rgb.astype(np.uint16) << 4) | 0x8,
                                  quality=90)),
-        # 12x7 arithmetic-coded sequential JPEG (SOF9, QM coder) — real
-        # decode since round 5 (multimodal/jpeg_arith.py)
-        (9, _arith_jpeg(rgb)),
+        # 12x7 arithmetic-coded sequential JPEG (SOF9): header-only
+        # metadata, decode stages tag it codec="stub"
+        (9, _ARITH_JPEG_12X7),
     ]
 
 
-def _arith_jpeg(rgb):
-    from firmwarescraper_spark.multimodal import jpeg_arith as JA
-
-    return JA.encode_jpeg_arith(rgb, quality=90)
+# The 12x7 raster above as an arithmetic-coded sequential JPEG (SOF9, QM
+# coder, DAC conditioning, quality 90). Frozen bytes: the package has no
+# arithmetic-coding encoder or decoder.
+_ARITH_JPEG_12X7 = (
+    b"\xff\xd8\xff\xe0\x00\x10\x4a\x46\x49\x46\x00\x01\x01\x00\x00\x01"
+    b"\x00\x01\x00\x00\xff\xdb\x00\x43\x00\x03\x02\x02\x03\x02\x02\x03"
+    b"\x03\x03\x03\x04\x03\x03\x04\x05\x08\x05\x05\x04\x04\x05\x0a\x07"
+    b"\x07\x06\x08\x0c\x0a\x0c\x0c\x0b\x0a\x0b\x0b\x0d\x0e\x12\x10\x0d"
+    b"\x0e\x11\x0e\x0b\x0b\x10\x16\x10\x11\x13\x14\x15\x15\x15\x0c\x0f"
+    b"\x17\x18\x16\x14\x18\x12\x14\x15\x14\xff\xdb\x00\x43\x01\x03\x04"
+    b"\x04\x05\x04\x05\x09\x05\x05\x09\x14\x0d\x0b\x0d\x14\x14\x14\x14"
+    b"\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14"
+    b"\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14"
+    b"\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\x14\xff\xc9"
+    b"\x00\x11\x08\x00\x07\x00\x0c\x03\x01\x11\x00\x02\x11\x01\x03\x11"
+    b"\x01\xff\xcc\x00\x0a\x00\x10\x10\x05\x01\x10\x11\x05\xff\xda\x00"
+    b"\x0c\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00\xff\x00\x95\xdc\x6a"
+    b"\xab\x97\x35\x3b\x9c\x16\xfe\xd3\xb7\xa4\xc7\xb1\x4d\x64\x5d\x9d"
+    b"\x7c\x1a\xbe\x48\x27\x57\x41\x4c\xeb\x31\xfb\x54\x9e\xc5\x64\x1e"
+    b"\xd4\x18\xd5\x38\xb7\xf3\xc4\xb0\x31\x5b\xc1\x91\x1e\xa7\xfc\xac"
+    b"\x43\x36\x73\xae\x91\xe6\x47\xbe\x21\x9d\x26\xa4\x51\x87\xea\x56"
+    b"\x72\x6b\x6f\xf4\xa5\x9e\x99\xa7\xfe\x62\x89\xf7\x05\x84\x81\xfd"
+    b"\x1f\xf0\x18\x61\xbe\x6b\x17\xa5\x60\x4a\x37\x65\x40\x9c\x68\x30"
+    b"\x5e\x9f\x42\x9d\xff\xd9"
+)
 
 
 def demo_image_neardup_payloads() -> list:

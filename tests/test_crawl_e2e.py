@@ -127,6 +127,33 @@ def test_resume_reproduces_state(spark, corpus, sim_result, tmp_path_factory):
     assert summary["items"] == len(sim_result.items)
 
 
+def test_round_releases_seen_checkpoint(spark, corpus, tmp_path_factory,
+                                        monkeypatch):
+    """A committed round leaves no checkpointed blocks behind: the count of
+    persisted RDDs after round 2 equals the count after round 1. Round 0
+    also checkpoints the robots tables, which live for the whole crawl.
+    The test holds a reference to every checkpoint taken, so the JVM's
+    garbage-driven cleaner cannot release a leaked one on its own."""
+    df_cls = type(spark.range(1))
+    real = df_cls.localCheckpoint
+    taken = []
+
+    def keep(self, *args, **kwargs):
+        taken.append(real(self, *args, **kwargs))
+        return taken[-1]
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", keep)
+    state = str(tmp_path_factory.mktemp("state_checkpoint"))
+    eng = CrawlEngine(spark, corpus, state, tokens_per_host=10_000, salt_buckets=4)
+    eng._write_frontier(eng.seed_frontier(G.seeds()), 0)
+    counts = []
+    for rnd in range(3):
+        eng.run_round(rnd)
+        counts.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    assert len(taken) >= 3
+    assert counts[2] == counts[1]
+
+
 def test_politeness_budget_defers(spark, corpus, tmp_path_factory):
     """A tight per-host budget must defer, not drop: the crawl takes more
     rounds but converges to the same seen set."""

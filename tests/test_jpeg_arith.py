@@ -1,181 +1,20 @@
-"""Arithmetic-coded JPEG (SOF9, multimodal/jpeg_arith.py).
+"""Arithmetic-coded and hierarchical JPEG streams are rejected by the
+Huffman-only decoder (multimodal/jpeg.py); the fixture is the committed
+arithmetic-coded demo payload (SOF9) from sources/generate.py."""
 
-No arithmetic-JPEG producer exists in this container (PIL/libjpeg builds
-are Huffman-only), so conformance is pinned by the three-way strategy the
-module docstring documents: raw-coder roundtrips over adaptive contexts,
-cross-profile PIXEL EXACTNESS against the Huffman baseline (both entropy
-stages share one quantized-coefficient store), and the marker/stuffing
-discipline."""
-
-import numpy as np
 import pytest
 
 from firmwarescraper_spark.multimodal import jpeg as J
-from firmwarescraper_spark.multimodal import jpeg_arith as JA
-
-
-def _img(shape, seed=7):
-    rng = np.random.default_rng(seed)
-    if len(shape) == 2:
-        return rng.integers(0, 256, shape, dtype=np.uint8)
-    return (rng.integers(0, 256, shape).astype(np.float64) * 0.35
-            + np.linspace(0, 190, shape[1])[None, :, None] * 0.65
-            ).astype(np.uint8)
-
-
-def test_qm_coder_roundtrip_randomized():
-    import random
-
-    random.seed(1234)
-    for _ in range(8):
-        n = random.choice([50, 500, 5000])
-        nctx = random.choice([1, 8, 64])
-        biases = [random.random() for _ in range(nctx)]
-        decisions = [
-            (c, 1 if random.random() < biases[c] else 0)
-            for c in (random.randrange(nctx) for _ in range(n))
-        ]
-        enc = JA.ArithEncoder()
-        st = bytearray(nctx)
-        for c, d in decisions:
-            enc.encode(st, c, d)
-        data = enc.flush()
-        dec = JA.ArithDecoder(bytes(data) + b"\xff\xd9", 0)
-        st2 = bytearray(nctx)
-        assert all(dec.decode(st2, c) == d for c, d in decisions)
-
-
-def test_qm_fixed_bin_stays_fixed():
-    enc = JA.ArithEncoder()
-    st = bytearray(256)
-    st[JA._FIXED_BIN_IDX_AC] = 113
-    for i in range(1000):
-        enc.encode(st, JA._FIXED_BIN_IDX_AC, i & 1)
-    assert st[JA._FIXED_BIN_IDX_AC] == 113     # never adapts, never switches
-    # ~0.5 probability: 1000 decisions cost ~125 bytes
-    assert 110 <= len(enc.flush()) <= 140
-
-
-@pytest.mark.parametrize("shape,sub", [
-    ((16, 16), "444"),
-    ((24, 40, 3), "444"),
-    ((33, 31, 3), "420"),
-    ((48, 40, 3), "422"),
-])
-def test_arith_pixel_exact_vs_huffman(shape, sub):
-    img = _img(shape)
-    blob_h = J.encode_jpeg(img, quality=80, subsampling=sub)
-    blob_a = JA.encode_jpeg_arith(img, quality=80, subsampling=sub)
-    assert np.array_equal(J.decode_jpeg(blob_h), J.decode_jpeg(blob_a))
-    # the point of arithmetic coding: smaller files, same pixels
-    assert len(blob_a) < len(blob_h)
-
-
-def test_arith_restart_intervals_pixel_exact():
-    img = _img((48, 64, 3), seed=11)
-    ref = J.decode_jpeg(J.encode_jpeg(img, quality=75, subsampling="420",
-                                      restart_interval=2))
-    for ri in (1, 2, 5):
-        blob = JA.encode_jpeg_arith(img, quality=75, subsampling="420",
-                                    restart_interval=ri)
-        assert np.array_equal(J.decode_jpeg(blob), ref)
-
-
-def test_arith_dac_conditioning_variants():
-    img = _img((32, 32, 3), seed=3)
-    ref = J.decode_jpeg(J.encode_jpeg(img, quality=75, subsampling="444"))
-    for dc_cond, kx in [((0, 1), 5), ((1, 3), 1), ((2, 5), 63)]:
-        blob = JA.encode_jpeg_arith(img, quality=75, subsampling="444",
-                                    dc_cond=dc_cond, ac_kx=kx)
-        assert np.array_equal(J.decode_jpeg(blob), ref)
-
-
-def test_arith_stream_is_stuffed():
-    img = _img((40, 40, 3), seed=5)
-    blob = JA.encode_jpeg_arith(img, quality=60, subsampling="444")
-    sos = blob.index(b"\xff\xda")
-    body = blob[sos + 2 + int.from_bytes(blob[sos + 2:sos + 4], "big"):-2]
-    i = 0
-    while i < len(body):
-        if body[i] == 0xFF:
-            assert body[i + 1] == 0x00, f"bare 0xFF at {i}"
-            i += 2
-        else:
-            i += 1
+from firmwarescraper_spark.sources.generate import demo_media_payloads
 
 
 def test_hierarchical_still_rejected():
-    img = _img((16, 16))
+    arith = dict(demo_media_payloads())[9]
+    with pytest.raises(ValueError):
+        J.decode_jpeg(arith)
     for marker in (0xC5, 0xCD):        # hierarchical profiles stay rejected
-        blob = bytearray(JA.encode_jpeg_arith(img))
+        blob = bytearray(arith)
         i = blob.index(b"\xff\xc9")
         blob[i + 1] = marker
         with pytest.raises(ValueError):
             J.decode_jpeg(bytes(blob))
-
-
-@pytest.mark.parametrize("predictor", list(range(1, 8)))
-def test_lossless_arith_exact_all_predictors(predictor):
-    rng = np.random.default_rng(31)
-    img = rng.integers(0, 256, (21, 17, 3), dtype=np.uint8)
-    blob = JA.encode_jpeg_lossless_arith(img, predictor=predictor)
-    assert np.array_equal(J.decode_jpeg(blob), img)
-
-
-def test_lossless_arith_16bit_pt_restart():
-    rng = np.random.default_rng(33)
-    img16 = rng.integers(0, 65536, (13, 19), dtype=np.uint16)
-    b16 = JA.encode_jpeg_lossless_arith(img16, predictor=4)
-    assert np.array_equal(J.decode_jpeg(b16)[:, :, 0], img16)
-    smooth = np.linspace(0, 255, 40 * 30).reshape(40, 30).astype(np.uint8)
-    bpt = JA.encode_jpeg_lossless_arith(smooth, predictor=2, pt=2)
-    assert np.array_equal(J.decode_jpeg(bpt)[:, :, 0], (smooth >> 2) << 2)
-    brs = JA.encode_jpeg_lossless_arith(smooth, predictor=7,
-                                        restart_interval=100)
-    assert np.array_equal(J.decode_jpeg(brs)[:, :, 0], smooth)
-    # the adaptive coder beats the Huffman lossless twin on smooth data
-    assert len(JA.encode_jpeg_lossless_arith(smooth)) < \
-        len(J.encode_jpeg_lossless(smooth))
-
-
-@pytest.mark.parametrize("shape,sub", [
-    ((16, 16), "444"),
-    ((24, 40, 3), "444"),
-    ((33, 31, 3), "420"),
-    ((64, 48, 3), "422"),
-    ((7, 9, 3), "420"),
-])
-def test_arith_progressive_pixel_exact(shape, sub):
-    """SOF10: the progressive arithmetic scan script decodes to EXACTLY
-    the baseline-Huffman pixels (shared coefficient store), and beats the
-    Huffman progressive encoding in size."""
-    img = _img(shape, seed=9)
-    ref = J.decode_jpeg(J.encode_jpeg(img, quality=80, subsampling=sub))
-    blob = JA.encode_jpeg_arith_progressive(img, quality=80, subsampling=sub)
-    assert np.array_equal(ref, J.decode_jpeg(blob))
-    assert len(blob) < len(
-        J.encode_jpeg_progressive(img, quality=80, subsampling=sub))
-
-
-def test_arith_progressive_dac_conditioning():
-    img = _img((32, 24, 3), seed=13)
-    ref = J.decode_jpeg(J.encode_jpeg(img, quality=70, subsampling="444"))
-    for dc_cond, kx in [((1, 3), 1), ((0, 2), 63)]:
-        blob = JA.encode_jpeg_arith_progressive(
-            img, quality=70, subsampling="444", dc_cond=dc_cond, ac_kx=kx)
-        assert np.array_equal(ref, J.decode_jpeg(blob))
-
-
-def test_arith_12bit_pixel_exact():
-    """SOF9 P=12 (Pq=1 tables, uint16 rasters): exact vs the 12-bit
-    Huffman extended-sequential path, at half the bytes."""
-    rng = np.random.default_rng(21)
-    img = ((rng.integers(0, 4096, (24, 32, 3)).astype(np.float64) * 0.3
-            + np.linspace(0, 3800, 32)[None, :, None] * 0.7)
-           ).astype(np.uint16)
-    ref = J.decode_jpeg(J.encode_jpeg_12bit(img, quality=85))
-    blob = JA.encode_jpeg_arith(img, quality=85, precision=12)
-    out = J.decode_jpeg(blob)
-    assert out.dtype == np.uint16
-    assert np.array_equal(ref, out)
-    assert len(blob) < len(J.encode_jpeg_12bit(img, quality=85))

@@ -322,19 +322,45 @@ def test_jpeg_422_and_restart_intervals():
 
 
 def test_jpeg_rejects_unsupported_profiles():
-    # SOF9/10/11 (arithmetic sequential/progressive/lossless) decode for
-    # real since round 5 (jpeg_arith.py); the hierarchical profiles keep
-    # rejecting.
+    # lossless (SOF3), arithmetic-coded (SOF9/10/11) and hierarchical
+    # profiles are rejected; binary.py routes them to the stub path
     import pytest as pt
 
     from firmwarescraper_spark.multimodal import jpeg as J
 
-    for marker in (0xC5, 0xCE):
+    for marker in (0xC3, 0xC5, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE):
         enc = bytearray(J.encode_jpeg(_gradient_rgb(8, 8)))
         sof = enc.find(b"\xff\xc0")
         enc[sof + 1] = marker
         with pt.raises(ValueError):
             J.decode_jpeg(bytes(enc))
+
+
+def test_unsupported_jpeg_profiles_take_stub_path(spark):
+    """The arithmetic-coded demo payload (SOF9), and its SOF3/SOF10/SOF11
+    relabels, keep real header metadata but come out of every decode
+    stage tagged codec="stub" without raising."""
+    from firmwarescraper_spark.multimodal.jpeg import jpeg_dims
+    from firmwarescraper_spark.sources.generate import demo_media_payloads
+
+    arith = dict(demo_media_payloads())[9]
+    assert MM.sniff_media_type(arith) == ("image", "jpeg")
+    assert jpeg_dims(arith) == (12, 7)
+    assert MM._try_decode_image(arith) == (None, None)
+
+    sof = arith.index(b"\xff\xc9")
+    payloads = [arith] + [arith[:sof + 1] + bytes([m]) + arith[sof + 2:]
+                          for m in (0xC3, 0xCA, 0xCB)]
+    df = spark.createDataFrame(list(enumerate(payloads)),
+                               "id long, payload binary")
+    meta = [r["media_meta"] for r in MM.attach_media_meta(df).collect()]
+    assert all((m["width"], m["height"]) == (12, 7) for m in meta)
+    dh = MM.attach_dhash(df).collect()
+    assert all(r["dhash"] is None and r["codec"] == "stub" for r in dh)
+    for stage in (MM.decode_image_batches(df), MM.resize_images(df, 4, 4),
+                  MM.frame_sample_video(df)):
+        assert {r["codec"] for r in stage.collect()} == {"stub"}
+    assert MM.extract_image_features(df, dim=4).count() == len(payloads)
 
 
 def test_jpeg_spark_pipeline(spark):

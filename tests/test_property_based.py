@@ -164,53 +164,3 @@ def test_canonicalize_series_parity_random(scheme, host, port, path):
     s = pd.Series([url], dtype=object)
     assert _canonicalize_series(s)[0] == canonicalize_url(url)
     assert _host_series(s)[0] == url_host(url)
-
-
-@settings(max_examples=40, deadline=None, derandomize=True,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(decisions=st.lists(
-    st.tuples(st.integers(0, 15), st.integers(0, 1)),
-    min_size=0, max_size=2000))
-def test_qm_coder_roundtrip_property(decisions):
-    """ANY (context, bit) decision sequence round-trips through the QM
-    coder, including the empty stream, all-MPS runs (carry/stacked-0xFF
-    paths), and adversarial alternations."""
-    from firmwarescraper_spark.multimodal.jpeg_arith import (
-        ArithDecoder, ArithEncoder)
-
-    enc = ArithEncoder()
-    st_area = bytearray(16)
-    for c, d in decisions:
-        enc.encode(st_area, c, d)
-    data = enc.flush()
-    # stuffing discipline: no bare 0xFF inside the entropy bytes
-    i = 0
-    while i < len(data):
-        if data[i] == 0xFF:
-            assert i + 1 < len(data) and data[i + 1] == 0x00
-            i += 2
-        else:
-            i += 1
-    dec = ArithDecoder(bytes(data) + b"\xff\xd9", 0)
-    st2 = bytearray(16)
-    assert all(dec.decode(st2, c) == d for c, d in decisions)
-
-
-@settings(max_examples=15, deadline=None, derandomize=True,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(shape=st.tuples(st.integers(4, 24), st.integers(4, 24)),
-       seed=st.integers(0, 2**31 - 1),
-       predictor=st.integers(1, 7),
-       depth=st.sampled_from([8, 16]))
-def test_lossless_arith_exact_random(shape, seed, predictor, depth):
-    """SOF11 reconstructs ANY raster exactly, any predictor, 8/16-bit."""
-    from firmwarescraper_spark.multimodal import jpeg_arith as JA
-
-    h, w = shape
-    rng = np.random.default_rng(seed)
-    if depth == 8:
-        img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-    else:
-        img = rng.integers(0, 65536, (h, w), dtype=np.uint16)
-    out = J.decode_jpeg(JA.encode_jpeg_lossless_arith(img, predictor=predictor))
-    assert np.array_equal(out[:, :, 0], img)

@@ -121,7 +121,7 @@ def _physical_plan(df) -> str:
 
 
 def test_fetch_broadcast_autogate(spark, tmp_path):
-    """broadcast_fetch='auto' must broadcast the dequeued set only while
+    """The fetch join must broadcast the dequeued set only while
     the frontier snapshot (an upper bound on it) fits the cap; past the
     cap the join runs unhinted — no forced BroadcastExchange of an
     unbounded dequeued set — and the crawl result is identical."""
@@ -130,7 +130,7 @@ def test_fetch_broadcast_autogate(spark, tmp_path):
 
     a = CrawlEngine(spark, corpus, str(tmp_path / "state_a"))
     a.run(G.seeds(), fresh=True)
-    # default auto: tiny frontier -> broadcast chosen
+    # default cap: tiny frontier -> broadcast chosen
     assert a._fetch_broadcast_choice(0) is True
 
     b = CrawlEngine(spark, corpus, str(tmp_path / "state_b"),
